@@ -7,12 +7,14 @@ do_dicom.py, do_results_DB.py) with optparse flags including a
 
     python -m dicomdb_spark list
     python -m dicomdb_spark query a1_dup_customer_day --sf-dir ... [-n 20]
-    python -m dicomdb_spark import --input-dir TREE [--test] [--proto-reg RX]
+    python -m dicomdb_spark import --input-dir TREE --db PATH [-t]
     python -m dicomdb_spark bench
 
-``import --test`` is the dry run: it prints the insert/update/noop
-classification counts and a sample of rendered upsert SQL instead of
-writing anywhere.
+``import`` crawls TREE and lands it with ``pipeline.import_tree`` in
+the ``serie`` and ``exam`` tables of the DuckDB database at PATH, then
+prints the insert/update/noop counts per table as one JSON line.
+``-t`` is the dry run against that DB: it opens PATH read-only,
+classifies and prints the same counts, and writes nothing.
 """
 
 from __future__ import annotations
@@ -52,38 +54,18 @@ def cmd_query(args) -> int:
 
 
 def cmd_import(args) -> int:
-    from pyspark.sql import functions as F
+    import duckdb
 
-    from dicomdb_spark import pipeline
-    from dicomdb_spark.sources.dicom import synthetic_parser
-    from dicomdb_spark.sources.jdbc import render_upsert_sql
+    from dicomdb_spark.pipeline import import_tree
 
-    spark = _spark()
-    # default = the built-in Part-10 reader; --synthetic keeps the
-    # deterministic fake for non-DICOM fixture trees
-    parser = synthetic_parser if getattr(args, "synthetic", False) else None
-    headers = pipeline.extract_headers(
-        spark, args.input_dir, parser=parser, proto_reg=args.proto_reg
+    db, dry_run = args.db, args.test
+    counts = import_tree(
+        _spark(),
+        args.input_dir,
+        lambda: duckdb.connect(db, read_only=dry_run),
+        test=dry_run,
     )
-    serie = pipeline.build_serie_frame(headers)
-    exams = pipeline.build_exam_frame(serie)
-    exam_cols = ["EUID", "AcquisitionDate", "n_series", "ExamDuration"]
-    new = exams.select(*exam_cols)
-    # no live DB in this environment: the "existing" snapshot is empty
-    existing = spark.createDataFrame([], new.schema)
-    classified = pipeline.classify_against_db(
-        new, existing, keys=["EUID"], compare_cols=exam_cols[1:]
-    )
-    counts = {
-        r["action"]: r["count"]
-        for r in classified.groupBy("action").count().collect()
-    }
-    print(json.dumps({"exams": counts, "series": serie.count()}))
-    if args.test:
-        # dry run (reference -t/--test_db): show intended statements
-        for row in classified.filter(F.col("action") != "noop").limit(3).collect():
-            rec = {k: v for k, v in row.asDict().items() if k != "action"}
-            print("DRY-RUN:", render_upsert_sql("exam", rec, ["EUID"])[:120])
+    print(json.dumps({**counts, "dry_run": dry_run}, sort_keys=True))
     return 0
 
 
@@ -115,12 +97,8 @@ def main(argv: list[str] | None = None) -> int:
     q.set_defaults(fn=cmd_query)
     imp = sub.add_parser("import")
     imp.add_argument("--input-dir", required=True)
-    imp.add_argument("--proto-reg", default=".*")
+    imp.add_argument("--db", required=True, help="DuckDB database path")
     imp.add_argument("-t", "--test", action="store_true", help="dry run")
-    imp.add_argument(
-        "--synthetic", action="store_true",
-        help="use the deterministic fake parser (non-DICOM fixture trees)",
-    )
     imp.set_defaults(fn=cmd_import)
     sq = sub.add_parser("sql")
     sq.add_argument("statement")

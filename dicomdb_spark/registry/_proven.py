@@ -426,6 +426,13 @@ ENGINE_MODULES_ACK: dict[str, tuple[str, ...]] = {
     "dicomdb_spark/functions/text.py": (
         "text_repetition", "text_lang_id", "text_lang_id_ngram",
     ),
+    # one import core; the serie frame's exam link now orders its files
+    # InstanceNumber nulls last, then path (e1_import_pipeline uses it)
+    "dicomdb_spark/pipeline.py": ("e1_import_pipeline",),
+    "dicomdb_spark/__main__.py": (),  # CLI only
+    "dicomdb_spark/streaming/incremental.py": (),  # dead helper removed
+    # shipped to workers by value; s6_upsert_render runs its renderer
+    "dicomdb_spark/sources/jdbc.py": ("s6_upsert_render",),
 }
 
 MODIFIED_SINCE_PROVEN: tuple[str, ...] = (
@@ -537,6 +544,8 @@ MODIFIED_SINCE_PROVEN: tuple[str, ...] = (
     # tercile split (4 consumers re-ran the bigram LM pipeline) —
     # oracle-rechecked at sf0.01 when landed
     "text_ccnet_buckets",
+    # sources/jdbc.py now ships to workers by value
+    "s6_upsert_render",
 )
 
 

@@ -1901,9 +1901,9 @@ def e1_import_pipeline(spark, sf_dir):
         )
         .drop("__h")
     )
-    classified = P.classify_against_db(
-        exams,
+    classified = oj.merge_classify(
         existing,
+        exams,
         keys=["EUID", "AcquisitionDate"],
         compare_cols=[
             "n_series",

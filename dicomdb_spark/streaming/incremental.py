@@ -5,7 +5,8 @@ at-least-once redelivery absorbed by upsert idempotence
 (common.py:267-306; do_dicom.py:741-753).  The streaming twin:
 
 * file-source stream with checkpoint ≙ the logfile-mtime watermark,
-* ``foreachBatch`` + MERGE classification ≙ the idempotent upsert,
+* ``foreachBatch`` + MERGE classification ≙ the idempotent upsert
+  (``pipeline.incremental_import_stream``),
 * day-window aggregation ≙ W3's sessionize-by-date.
 
 At scale this runs continuously on the landing bucket; locally the
@@ -13,8 +14,6 @@ tests drive it with ``availableNow`` + ``processAllAvailable``.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,33 +51,6 @@ def windowed_daily_counts(
             F.max(ts_col).alias("last_ts"),
         )
     )
-
-
-def foreach_batch_upsert(
-    target_fetch: Callable[[SparkSession], DataFrame],
-    apply_actions: Callable[[DataFrame], None],
-    keys: list[str],
-    compare_cols: list[str],
-    float_cols: list[str] = (),
-):
-    """S7 streaming — idempotent upsert via MERGE classification.
-
-    Each micro-batch is classified against the current target snapshot
-    (insert/update/noop); ``apply_actions`` receives only the
-    non-noop rows.  Redelivered files classify as noop — the
-    at-least-once absorption the reference got from its exist-checks
-    (Cenir_DB.py:79-101).
-    """
-    from dicomdb_spark.operators.joins import merge_classify
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        existing = target_fetch(batch_df.sparkSession)
-        classified = merge_classify(
-            existing, batch_df, keys, compare_cols, float_cols
-        )
-        apply_actions(classified.filter(F.col("action") != "noop"))
-
-    return fn
 
 
 def slo_burn_stream(

@@ -35,6 +35,37 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.smoke)
 
 
+# the import's DB tables (pipeline.SERIE_SCHEMA / EXAM_SCHEMA)
+IMPORT_DDL = (
+    'CREATE TABLE exam ("EUID" VARCHAR, "AcquisitionDate" VARCHAR,'
+    ' "n_series" BIGINT, "ExamDuration" BIGINT, "FirstSerieName" VARCHAR,'
+    ' PRIMARY KEY ("EUID", "AcquisitionDate"))',
+    'CREATE TABLE serie ("SeriesInstanceUID" VARCHAR,'
+    ' "SeriesNumber" INTEGER, "EchoTime" DOUBLE, "EUID" VARCHAR,'
+    ' "AcquisitionDate" VARCHAR, "first_acq_seconds" DOUBLE,'
+    ' "duration_s" DOUBLE,'
+    ' PRIMARY KEY ("SeriesInstanceUID", "SeriesNumber", "EchoTime"))',
+)
+
+
+def make_import_db(path: str) -> str:
+    """A DuckDB file at ``path`` with empty ``exam`` and ``serie`` tables."""
+    import duckdb
+
+    con = duckdb.connect(path)
+    try:
+        for ddl in IMPORT_DDL:
+            con.execute(ddl)
+    finally:
+        con.close()
+    return path
+
+
+@pytest.fixture()
+def db_path(tmp_path):
+    return make_import_db(str(tmp_path / "standin.duckdb"))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="dicomdb_spark_tests", master="local[8]", shuffle_partitions=8)

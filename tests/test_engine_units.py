@@ -168,6 +168,39 @@ def test_assemble_null_instance_degrades_to_flag(spark):
     assert out.n_missing == 0 and out.n_duplicates == 0
 
 
+def test_serie_exam_link_orders_null_instance_numbers_last(spark):
+    """build_serie_frame picks each stack's EUID and AcquisitionDate from
+    its first file in stack-kernel order: InstanceNumber nulls last,
+    then path.  A stack whose files all lack InstanceNumber still gets
+    an exam key (min_by over a NULL ordering would return NULL)."""
+    from dicomdb_spark.pipeline import build_serie_frame
+    from dicomdb_spark.sources.dicom import HEADER_SCHEMA
+
+    def hdr(suid, path, inst, study, day):
+        return (path, suid, study, 1, inst, 2.5, day, "120000.000000", None, None)
+
+    headers = spark.createDataFrame(
+        [
+            # all NULL: the first path wins
+            hdr("ALLNULL", "/a/f2.dic", None, "study.late", "20240102"),
+            hdr("ALLNULL", "/a/f1.dic", None, "study.first", "20240101"),
+            # partly NULL: the numbered file wins over an earlier path
+            hdr("PART", "/p/f0.dic", None, "study.null", "20240109"),
+            hdr("PART", "/p/f3.dic", 3, "study.three", "20240103"),
+            hdr("PART", "/p/f1.dic", 2, "study.two", "20240102"),
+        ],
+        HEADER_SCHEMA,
+    )
+    link = {
+        r.SeriesInstanceUID: (r.EUID, r.AcquisitionDate)
+        for r in build_serie_frame(headers).collect()
+    }
+    assert link == {
+        "ALLNULL": ("study.first", "20240101"),
+        "PART": ("study.two", "20240102"),
+    }
+
+
 def test_assemble_stacks_groups_span_arrow_batches(spark):
     # r13 optimization regression: the vectorized mapInPandas kernel
     # must carry a stack whose rows straddle Arrow batch boundaries
@@ -549,36 +582,6 @@ def test_streaming_daily_counts(spark, tmp_path):
     finally:
         q.stop()
     assert {(r.user_id, r.n_items) for r in rows} == {(0, 5), (1, 5)}
-
-
-def test_foreach_batch_upsert_idempotent(spark, tmp_path):
-    src = str(tmp_path / "in2")
-    target: dict[int, tuple] = {1: ("a", 1.0)}  # pre-existing row
-
-    incoming = spark.createDataFrame(
-        [Row(k=1, name="a", v=1.0), Row(k=2, name="b", v=2.0), Row(k=1, name="a2", v=1.0)]
-    )
-    incoming.write.mode("overwrite").parquet(src)
-
-    seen_actions = []
-
-    def fetch(s):
-        return s.createDataFrame(
-            [Row(k=k, name=n, v=v) for k, (n, v) in target.items()],
-            schema="k long, name string, v double",
-        )
-
-    def apply(df):
-        seen_actions.extend((r.k, r.action) for r in df.collect())
-
-    fn = stream.foreach_batch_upsert(fetch, apply, ["k"], ["name", "v"], ["v"])
-    batch = spark.read.parquet(src)
-    fn(batch, 0)
-    acts = sorted(seen_actions)
-    # k=2 is new → insert; k=1 appears twice: one noop (identical) and
-    # one update (name changed)
-    assert (2, "insert") in acts and (1, "update") in acts
-    assert (1, "noop") not in acts  # noops filtered out
 
 
 # ------------------------------------------------------------ sinks/views
@@ -1430,15 +1433,21 @@ def test_cut_lineage_modes(spark, tmp_path, monkeypatch):
     assert "Scan ExistingRDD" in cut._jdf.queryExecution().executedPlan().toString()
     assert [r.v for r in cut.orderBy("id").limit(3).collect()] == [3, 5, 7]
 
-    # reliable mode: checkpoint() into the env-pointed directory
+    # reliable mode: checkpoint() into the env-pointed directory.  The
+    # context keeps its first checkpoint dir, so restore the previous
+    # one afterwards: later tests must not reuse this deleted tmp_path
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    prev_dir = jsc.getCheckpointDir()
     ck = tmp_path / "reliable_ck"
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ck))
-    cut2 = cut_lineage(chained)
-    assert [r.v for r in cut2.orderBy("id").limit(3).collect()] == [3, 5, 7]
-    assert spark.sparkContext.getCheckpointDir() is not None
-    import os
-
-    assert any(os.scandir(ck)), "reliable checkpoint dir not written"
+    try:
+        cut2 = cut_lineage(chained)
+        assert [r.v for r in cut2.orderBy("id").limit(3).collect()] == [3, 5, 7]
+        assert sc.getCheckpointDir() is not None
+        assert any(os.scandir(ck)), "reliable checkpoint dir not written"
+    finally:
+        getattr(jsc, "checkpointDir_$eq")(prev_dir)  # Scala var setter
 
 
 def test_bucket_pair_dots_topk_prune_matches_window(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 
 from dicomdb_spark import pipeline
+from dicomdb_spark.operators.joins import merge_classify
 
 
 def deterministic_parser(content: bytes) -> dict:
@@ -70,10 +71,10 @@ def test_pipeline_end_to_end(spark, exam_tree):
     # + last series duration (instance2−instance1 = 60 s) → 3660 → 61 min
     assert e.ExamDuration == pytest.approx(61)
 
-    classified = pipeline.classify_against_db(
-        exams.select("EUID", "AcquisitionDate", "n_series", "ExamDuration"),
+    classified = merge_classify(
         exams.select("EUID", "AcquisitionDate", "n_series", "ExamDuration").limit(1),
-        keys=["EUID"],
+        exams.select("EUID", "AcquisitionDate", "n_series", "ExamDuration"),
+        keys=["EUID", "AcquisitionDate"],
         compare_cols=["n_series", "ExamDuration"],
     )
     acts = sorted(r.action for r in classified.collect())

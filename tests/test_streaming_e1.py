@@ -14,33 +14,8 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from pyspark.sql import functions as F
-
 from dicomdb_spark import pipeline as P
 from dicomdb_spark.sources.dicom import parse_headers, synthetic_part10_from_ids
-
-
-@pytest.fixture()
-def db_path(tmp_path):
-    path = str(tmp_path / "standin.duckdb")
-    con = duckdb.connect(path)
-    con.execute(
-        'CREATE TABLE exam ("EUID" VARCHAR, "AcquisitionDate" VARCHAR,'
-        ' "n_series" BIGINT, "ExamDuration" BIGINT, "FirstSerieName" VARCHAR,'
-        ' PRIMARY KEY ("EUID", "AcquisitionDate"))'
-    )
-    # serie-level state: the stream recomputes exam aggregates from the
-    # DB's full serie set per affected exam (Cenir_DB.py:839-868
-    # semantics), so exams may arrive split across micro-batches
-    con.execute(
-        'CREATE TABLE serie ("SeriesInstanceUID" VARCHAR,'
-        ' "SeriesNumber" INTEGER, "EchoTime" DOUBLE, "EUID" VARCHAR,'
-        ' "AcquisitionDate" VARCHAR, "first_acq_seconds" DOUBLE,'
-        ' "duration_s" DOUBLE,'
-        ' PRIMARY KEY ("SeriesInstanceUID", "SeriesNumber", "EchoTime"))'
-    )
-    con.close()
-    return path
 
 
 def _wave(spark, ids):
@@ -92,20 +67,8 @@ def test_incremental_import_two_waves_matches_batch(spark, tmp_path, db_path):
     assert _db_state(db_path) == state2
 
     # end-state == the batch pipeline over ALL files at once
-    headers = parse_headers(_wave(spark, all_ids)).filter(
-        F.col("SeriesInstanceUID").isNotNull()
-    )
-    batch = (
-        P.build_exam_frame(P.build_serie_frame(headers))
-        .select(
-            "EUID",
-            "AcquisitionDate",
-            F.col("n_series").cast("long"),
-            F.col("ExamDuration").cast("long"),
-            "FirstSerieName",
-        )
-        .collect()
-    )
+    headers = parse_headers(_wave(spark, all_ids))
+    batch = P.exam_db_frame(P.serie_db_frame(headers)).collect()
     assert sorted(tuple(r) for r in batch) == state2
 
 
@@ -141,20 +104,8 @@ def test_exam_split_across_batches_converges(spark, tmp_path, db_path):
     run_stream()
     state = _db_state(db_path)
 
-    headers = parse_headers(_wave(spark, all_ids)).filter(
-        F.col("SeriesInstanceUID").isNotNull()
-    )
-    batch = (
-        P.build_exam_frame(P.build_serie_frame(headers))
-        .select(
-            "EUID",
-            "AcquisitionDate",
-            F.col("n_series").cast("long"),
-            F.col("ExamDuration").cast("long"),
-            "FirstSerieName",
-        )
-        .collect()
-    )
+    headers = parse_headers(_wave(spark, all_ids))
+    batch = P.exam_db_frame(P.serie_db_frame(headers)).collect()
     assert sorted(tuple(r) for r in batch) == state
 
 
@@ -309,20 +260,7 @@ def test_writer_partition_count_yields_identical_db_state(
     # recompute the expected state from the batch pipeline (identical
     # for every writer count — this pins equivalence without needing
     # two DBs side by side)
-    headers = parse_headers(_wave(spark, all_ids)).filter(
-        F.col("SeriesInstanceUID").isNotNull()
-    )
-    serie_b = P.build_serie_frame(headers)
-    batch_exam = (
-        P.build_exam_frame(serie_b)
-        .select(
-            "EUID",
-            "AcquisitionDate",
-            F.col("n_series").cast("long"),
-            F.col("ExamDuration").cast("long"),
-            "FirstSerieName",
-        )
-        .collect()
-    )
+    serie_b = P.serie_db_frame(parse_headers(_wave(spark, all_ids)))
+    batch_exam = P.exam_db_frame(serie_b).collect()
     assert sorted(tuple(r) for r in batch_exam) == exam
     assert len(serie) == serie_b.count()
